@@ -53,9 +53,11 @@ def _doc_bigrams(docs: DataFrame, n_buckets: int, id_col: str,
     """→ (id, u, b) one row per bigram POSITION (not distinct): u is
     the context word's bucket, b the word-pair bucket. Linear zip_with
     (no quadratic slice capture), docs with < 2 tokens emit nothing."""
-    # bind the token array ONCE (its own projection): the size filter
-    # and both slices then read a bound attribute instead of each
-    # re-evaluating the tokenizer expression (functions/text.py:40)
+    # bind the token array in its own projection: both slices and the
+    # zip_with read that bound attribute instead of each re-evaluating
+    # the tokenizer expression (functions/text.py:40). The size filter
+    # does not: Catalyst substitutes its alias and pushes it below the
+    # projection, so it runs on its own tokenizer call
     t = (docs.select(F.col(id_col), tokens(text_col).alias("_toks"))
          .filter(F.size("_toks") >= 2))
     toks = F.col("_toks")

@@ -104,6 +104,17 @@ def autosize_shuffle_partitions(spark: SparkSession, df: DataFrame,
     return n
 
 
+def autosize_unless_set(spark: SparkSession, df: DataFrame) -> int | None:
+    """``autosize_shuffle_partitions`` for a job's session, unless its
+    SparkConf already holds ``spark.sql.shuffle.partitions`` (a
+    spark-submit ``--conf``, spark-defaults or builder value): an
+    explicit choice wins over the size rule. Returns the chosen value,
+    or None when the explicit one was kept."""
+    if spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
+        return None
+    return autosize_shuffle_partitions(spark, df)
+
+
 def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     """Repartition ``df`` up to ``target`` partitions (default: the
     session's default parallelism) unless the scan already provides at

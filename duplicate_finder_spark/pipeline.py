@@ -13,6 +13,7 @@ import hashlib
 import json
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -69,6 +70,13 @@ def dedup_clusters(pages: DataFrame, cfg: PipelineConfig,
 
 
 # --- resumable, lineage-tracked run (north rule: checkpoint + metrics) ------
+
+#: the ``metrics`` table's columns; the table is built from Arrow so its
+#: few driver-side rows never go through a Python worker
+METRICS_SCHEMA = pa.schema([("stage", pa.string()), ("rows", pa.int64()),
+                            ("wall_sec", pa.float64()),
+                            ("resumed", pa.bool_()),
+                            ("fingerprint", pa.string())])
 
 
 def config_fingerprint(cfg: PipelineConfig, input_id: str) -> str:
@@ -142,9 +150,7 @@ def run_resumable(spark: SparkSession, pages: DataFrame,
                     "resumed": False, "fingerprint": fp})
 
     warehouse.write(
-        spark.createDataFrame(metrics,
-                              schema=("stage string, rows long, "
-                                      "wall_sec double, resumed boolean, "
-                                      "fingerprint string")),
+        spark.createDataFrame(
+            pa.Table.from_pylist(metrics, schema=METRICS_SCHEMA)),
         f"metrics_{fp}", stage="metrics", fingerprint=fp)
     return decisions

@@ -36,6 +36,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,9 +47,11 @@ class StageManifest:
     fingerprint: str
     rows: int
     written_at: float
-    # per-partition lineage (north rule): row count per read-split of the
-    # written snapshot, in partition order — the skew evidence a rerun or
-    # an operator-tuning pass reads before touching the data
+    # per-partition lineage (north rule): ParquetWarehouse records the
+    # rows of each non-empty written file, read from the Parquet footers,
+    # in file-path order (IcebergWarehouse: rows per read split) — the
+    # skew evidence a rerun or an operator-tuning pass reads before
+    # touching the data
     partition_rows: list[int] = field(default_factory=list)
     n_partitions: int = 0
     max_partition_rows: int = 0
@@ -60,6 +63,21 @@ class StageManifest:
             return 1.0
         mean = self.rows / len(self.partition_rows)
         return self.max_partition_rows / mean if mean else 1.0
+
+
+def _file_rows(data_dir: str) -> list[int]:
+    """Rows of each non-empty Parquet file under ``data_dir`` (a
+    ``partition_by`` write nests them in ``col=value`` dirs), in path
+    order. Read from the footers on the driver: no Spark job. Spark's
+    hidden and marker files (``.``/``_`` prefixes) are skipped, and so
+    is the zero-row file an empty write leaves."""
+    paths = []
+    for d, dirs, files in os.walk(data_dir):
+        dirs[:] = [x for x in dirs if not x.startswith((".", "_"))]
+        paths += [os.path.join(d, f) for f in files
+                  if not f.startswith((".", "_"))]
+    rows = (pq.read_metadata(p).num_rows for p in sorted(paths))
+    return [n for n in rows if n]
 
 
 def _partition_histogram(df: DataFrame) -> list[int]:
@@ -122,8 +140,7 @@ class ParquetWarehouse:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(os.path.join(snap, "data"))
-        back = self.spark.read.parquet(os.path.join(snap, "data"))
-        parts = _partition_histogram(back)
+        parts = _file_rows(os.path.join(snap, "data"))
         rows = sum(parts)
         manifest = StageManifest(stage=stage or name,
                                  fingerprint=fingerprint, rows=rows,

@@ -213,12 +213,12 @@ def main(argv: list[str] | None = None) -> int:
             docs = spark.table(args.input)
         else:
             docs = spark.read.parquet(args.input)
-        # shuffle sized to the scanned input, as in jobs/dedup.py;
-        # --no-autosize preserves an explicit spark-submit --conf value
+        # shuffle sized to the scanned input, as in jobs/dedup.py: an
+        # explicit spark.sql.shuffle.partitions in the SparkConf is kept
         if not args.no_autosize:
             from duplicate_finder_spark.partitioning import (
-                autosize_shuffle_partitions)
-            autosize_shuffle_partitions(spark, docs)
+                autosize_unless_set)
+            autosize_unless_set(spark, docs)
         # strata column (if any) rejoins at the end by id — the funnel
         # itself runs on the minimal (id, text) projection
         if args.eval_input:

@@ -63,8 +63,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--no-autosize", action="store_true",
                    help="keep the session's spark.sql.shuffle.partitions "
                         "instead of sizing it from the scanned input "
-                        "bytes (use when an explicit --conf value is "
-                        "the deliberate choice)")
+                        "bytes (an explicit --conf value is kept "
+                        "either way)")
     return p.parse_args(argv)
 
 
@@ -98,15 +98,16 @@ def main(argv: list[str] | None = None) -> int:
 
         # size the shuffle to the INPUT, not the session default,
         # deriving from scanned bytes so an 8M-doc run does not push
-        # 600 MB partitions through a 16g heap. NOTE: this overwrites
-        # any spark-submit --conf spark.sql.shuffle.partitions; a
-        # cluster operator who wants their conf to win must also pass
-        # --no-autosize
+        # 600 MB partitions through a 16g heap. An explicit
+        # spark.sql.shuffle.partitions in the SparkConf (spark-submit
+        # --conf) is kept; --no-autosize keeps the session default too
         if not args.no_autosize:
             from duplicate_finder_spark.partitioning import (
-                autosize_shuffle_partitions)
-            n_parts = autosize_shuffle_partitions(spark, pages)
-            print(f"shuffle.partitions={n_parts} (auto)", file=sys.stderr)
+                autosize_unless_set)
+            n_parts = autosize_unless_set(spark, pages)
+            if n_parts is not None:
+                print(f"shuffle.partitions={n_parts} (auto)",
+                      file=sys.stderr)
 
         input_id = args.input_id or args.input
         if args.warmup:

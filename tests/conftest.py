@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from duplicate_finder_spark.session import get_spark
@@ -26,3 +28,20 @@ def small_pages(spark, small_corpus):
     pages = pages.cache()
     pages.count()
     return pages, truth
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → the Spark jobs ``fn()`` launches, counted in
+    a job group of its own through the status tracker."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

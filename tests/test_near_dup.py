@@ -6,9 +6,11 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from duplicate_finder_spark.config import PipelineConfig
+from duplicate_finder_spark.operators import components as comp
 from duplicate_finder_spark.operators.components import connected_components
 from duplicate_finder_spark.operators.lsh import (band_hashes,
                                                   candidate_pairs,
@@ -219,7 +221,10 @@ def _uf_oracle(edges):
     return {frozenset(v | {k}) for k, v in comps.items()}
 
 
-def test_connected_components_random_graphs(spark):
+@pytest.mark.parametrize("budget", [comp.DRIVER_EDGE_BUDGET, -1],
+                         ids=["driver", "star"])
+def test_connected_components_random_graphs(spark, monkeypatch, budget):
+    monkeypatch.setattr(comp, "DRIVER_EDGE_BUDGET", budget)
     rng = random.Random(42)
     for trial in range(3):
         n = 120

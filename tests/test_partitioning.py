@@ -8,7 +8,7 @@ import pytest
 
 from duplicate_finder_spark.partitioning import (
     SHUFFLE_EXPANSION, SHUFFLE_TARGET_BYTES, autosize_shuffle_partitions,
-    scan_bytes, shuffle_partitions_for)
+    autosize_unless_set, scan_bytes, shuffle_partitions_for)
 
 MIB = 1 << 20
 
@@ -102,3 +102,27 @@ def test_autosize_skips_implausible_estimate(spark, monkeypatch):
     n = pt.autosize_shuffle_partitions(spark, spark.range(10))
     assert n == int(before)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_autosize_keeps_explicit_conf(spark, tmp_path, monkeypatch):
+    """The jobs' autosize keeps a spark.sql.shuffle.partitions that the
+    SparkConf holds (spark-submit --conf), and sizes it when unset."""
+    from pyspark import SparkConf
+    path = str(tmp_path / "pages")
+    spark.range(10_000).selectExpr(
+        "id", "repeat('x', 200) AS text").write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    assert sc.getConf().contains("spark.sql.shuffle.partitions")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        assert autosize_unless_set(spark, df) is None
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        monkeypatch.setattr(sc, "getConf",
+                            lambda: SparkConf(loadDefaults=False))
+        n = autosize_unless_set(spark, df)
+        assert n == sc.defaultParallelism
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

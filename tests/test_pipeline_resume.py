@@ -330,3 +330,51 @@ def test_iceberg_manifest_schema_accepts_empty_partition_rows(spark):
     row = df.collect()[0]
     assert row["partition_rows"] == []
     assert row["rows"] == 0
+
+
+def _spark_file_rows(spark, path: str) -> list[int]:
+    """Rows per data file of a parquet dir, counted by Spark, in file
+    path order."""
+    rows = (spark.read.parquet(path)
+            .groupBy(F.input_file_name().alias("f")).count().collect())
+    return [r["count"] for r in sorted(rows, key=lambda r: r["f"])]
+
+
+def test_parquet_manifest_matches_spark_count(spark, tmp_path):
+    """The manifest's row counts come from the Parquet footers; they
+    must equal what Spark counts in the snapshot, for a multi-file
+    write with uneven files and for a ``partition_by`` write."""
+    import os
+    wh = get_warehouse(spark, str(tmp_path / "wh"))
+    # 3 keys hashed into 4 partitions: uneven files, and one partition
+    # writes none
+    uneven = (spark.range(1000).withColumn("k", F.col("id") % 3)
+              .repartition(4, "k"))
+    split = (spark.range(600)
+             .withColumn("action", F.when(F.col("id") % 5 == 0, "keep")
+                         .otherwise("delete"))
+             .repartition(3))
+    for name, df, by in (("multi", uneven, None),
+                         ("split", split, ["action"])):
+        m = wh.write(df, name, stage=name, fingerprint="fp",
+                     partition_by=by)
+        data = os.path.join(os.path.realpath(
+            str(tmp_path / "wh" / name / "current")), "data")
+        counted = _spark_file_rows(spark, data)
+        assert len(counted) > 1
+        assert m.partition_rows == counted
+        assert m.rows == wh.read(name).count() == df.count()
+        assert m.n_partitions == len(counted)
+        assert m.max_partition_rows == max(counted)
+        assert wh.manifest(name).partition_rows == counted
+
+
+def test_parquet_write_launches_no_readback_job(spark, tmp_path,
+                                                count_jobs):
+    """The manifest costs no Spark job: a warehouse write launches as
+    many jobs as a bare parquet write of the same DataFrame."""
+    wh = get_warehouse(spark, str(tmp_path / "wh"))
+    df = spark.range(2000).withColumn("x", F.col("id") * 2)
+    bare = count_jobs(
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "bare")))
+    assert count_jobs(lambda: wh.write(df, "t", stage="t")) == bare
