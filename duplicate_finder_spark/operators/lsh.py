@@ -155,80 +155,6 @@ def incremental_candidate_pairs(bands_new: DataFrame, bands_all: DataFrame,
     return pairs_small.unionByName(pairs_hot).distinct()
 
 
-def candidate_pairs_compact(sigs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """→ distinct (url_a, url_b), url_a < url_b — same output set as
-    ``candidate_pairs`` on the non-hot path, compact wire format.
-
-    MEASURED AND NOT ADOPTED (r4 A/B, 2M docs, counterbalanced
-    alternating passes; raw: BENCH/runs/ab_did_20260817_234401.json):
-    best candidates-stage walls local[32] 155.9 s (url) vs 170.7 s
-    (did, −9%), local[8] 218.8 s (url) vs 190.1 s (did, +13%) — the
-    two core counts DISAGREE and both deltas sit inside this host's
-    documented variance band, so the ~2× wire-byte saving does not
-    dominate the stage (the per-bucket sort and pair generation do).
-    One structural DOWNSIDE is real and scale-relevant: per-band
-    hot-bucket reps (min-did of each band's bucket) diverge across
-    bands where the min-url rep coincides, so cross-band ``distinct()``
-    collapses less — 1.726M vs 1.564M pairs (+10%) fed to verify on
-    the same corpus. The url plan stays the default; this variant and
-    its contract tests stay as the measured record.
-
-    The hypothesis was: the candidates stage is the measured pipeline
-    limiter and is memory-bandwidth-bound in its one big exchange +
-    sort (BENCH/BASELINE.md "Per-stage scaling"); most of the bytes on
-    that wire are the ~40-char ``url`` string replicated onto every
-    docs × bands exploded row. Here the band table carries
-    ``xxhash64(url)`` (8 bytes) instead; the census window, the
-    small-bucket self-equi-join, the hot-bucket star edges and the pair
-    ``distinct()`` all run on compact longs, and urls are joined back
-    onto the distinct PAIR output — orders of magnitude smaller than
-    the band table at web dup rates.
-
-    Correctness under collisions: a missed true pair needs both its
-    urls to collide under xxhash64 (P = 2^-64 per pair; ~5e-8 expected
-    misses across 10^12 docs' dup pairs); a false pair from a collision
-    is dropped by the verify stage like any other false candidate.
-
-    Hot-bucket reps become min-did instead of min-url — a different
-    (still deterministic, uniformly chosen) star center. On the
-    non-hot path the output pair SET is identical to
-    ``candidate_pairs`` (asserted in tests/test_lsh_compact.py); on
-    the hot path the star EDGES differ but every member still reaches
-    the bucket's single representative, so connectivity — and
-    therefore the clusters connected components produces — is
-    identical (also asserted there, under a forced hot_bucket_limit).
-    """
-    bands = band_hashes(sigs.withColumn("url", F.xxhash64("url")), cfg) \
-        .withColumnRenamed("url", "did")
-    w = Window.partitionBy("band", "band_hash")
-    bands = (bands
-             .withColumn("bucket_size", F.count("*").over(w))
-             .withColumn("bucket_rep", F.min("did").over(w))
-             .filter(F.col("bucket_size") > 1))
-
-    small = bands.filter(F.col("bucket_size") <= cfg.hot_bucket_limit)
-    hot = bands.filter(F.col("bucket_size") > cfg.hot_bucket_limit)
-
-    left = small.select("band", "band_hash", F.col("did").alias("did_a"))
-    right = small.select("band", "band_hash", F.col("did").alias("did_b"))
-    pairs_small = (left.join(right, ["band", "band_hash"])
-                   .filter(F.col("did_a") < F.col("did_b"))
-                   .select("did_a", "did_b"))
-    pairs_hot = (hot.filter(F.col("did") != F.col("bucket_rep"))
-                 .select(F.col("bucket_rep").alias("did_a"),
-                         F.col("did").alias("did_b")))
-    dids = pairs_small.unionByName(pairs_hot).distinct()
-
-    idmap = sigs.select(F.xxhash64("url").alias("did"), "url")
-    return (dids
-            .join(idmap.withColumnsRenamed(
-                {"did": "did_a", "url": "_ua"}), "did_a")
-            .join(idmap.withColumnsRenamed(
-                {"did": "did_b", "url": "_ub"}), "did_b")
-            .select(F.least("_ua", "_ub").alias("url_a"),
-                    F.greatest("_ua", "_ub").alias("url_b")))
-
-
 def verify_pairs(pairs: DataFrame, sigs: DataFrame, threshold: float,
                  cfg: PipelineConfig | None = None) -> DataFrame:
     """V1 generalized: Jaccard over hashed shingle sets, fully JVM-side

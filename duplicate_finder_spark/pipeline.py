@@ -45,30 +45,6 @@ def near_dup_edges(pages: DataFrame, cfg: PipelineConfig,
     return verify_pairs(pairs, sigs, cfg.jaccard_threshold, cfg)
 
 
-def dedup_clusters(pages: DataFrame, cfg: PipelineConfig,
-                   include_near: bool = True) -> DataFrame:
-    """Full clustering → (cluster_id, url, rank, size).
-
-    cluster_id is the component's minimum url (near stage) — and since
-    exact edges also use star-to-rank-1 (minimum url of the hash group),
-    the representative is the keep-first member in both regimes.
-    """
-    filtered = ex.apply_filters(pages, cfg)
-    exact_cl = ex.exact_clusters(pages, cfg)
-    edges = exact_edges(exact_cl)
-    if include_near:
-        near = near_dup_edges(filtered, cfg).select(
-            F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
-        edges = edges.unionByName(near)
-    assign = connected_components(edges)
-    sized = assign.join(
-        filtered.select("url", ex.SIZE_COL), "url", "left")
-    w = Window.partitionBy("cluster_id").orderBy("url")
-    return (sized
-            .withColumn("rank", F.row_number().over(w))
-            .select("cluster_id", "url", "rank", ex.SIZE_COL))
-
-
 # --- resumable, lineage-tracked run (north rule: checkpoint + metrics) ------
 
 #: the ``metrics`` table's columns; the table is built from Arrow so its
@@ -123,8 +99,7 @@ def run_resumable(spark: SparkSession, pages: DataFrame,
     sigs = staged("signatures", lambda: signatures(filtered, cfg))
     edges = staged("edges", lambda: (
         exact_edges(ex.exact_clusters(pages, cfg)).unionByName(
-            verify_pairs(candidate_pairs(sigs, cfg), sigs,
-                         cfg.jaccard_threshold, cfg)
+            near_dup_edges(filtered, cfg, sigs)
             .select(F.col("url_a").alias("src"),
                     F.col("url_b").alias("dst")))))
     clusters = staged("clusters", lambda: connected_components(

@@ -64,12 +64,7 @@ REGISTRY_SCHEMA = "batch_id string, rows long, committed_at double"
 
 def store_batches(wh, exclude: str | None = None) -> list[str]:
     """Committed batch ids from the registry, oldest first."""
-    if not wh.exists(REGISTRY):
-        return []
-    rows = wh.read(REGISTRY).select("batch_id", "committed_at").collect()
-    return [r["batch_id"] for r in
-            sorted(rows, key=lambda r: r["committed_at"])
-            if r["batch_id"] != exclude]
+    return [b for b, _, _ in registry_rows(wh, exclude)]
 
 
 def read_store(wh, template: DataFrame, columns: list[str],

@@ -17,7 +17,8 @@ from duplicate_finder_spark.operators.lsh import (band_hashes,
                                                   verify_pairs)
 from duplicate_finder_spark.operators.minhash import signatures
 from duplicate_finder_spark.operators.simhash import simhash, simhash_pairs
-from duplicate_finder_spark.pipeline import dedup_clusters
+from duplicate_finder_spark.pipeline import run_resumable
+from duplicate_finder_spark.warehouse import ParquetWarehouse
 
 CFG = PipelineConfig(num_perm=128, lsh_bands=32, jaccard_threshold=0.8)
 
@@ -202,6 +203,36 @@ def test_sketch_verify_identical_to_exact_when_not_truncated(spark, small_pages)
     assert new == old
 
 
+def test_candidate_pairs_hot_bucket_star_edges(spark):
+    """12 identical docs fill one band bucket of size 12 > limit 3 in
+    every band, so batch candidate_pairs must take the star path: 11
+    edges to the bucket's min url, not C(12,2) = 66 all-pairs; the
+    verified star still puts all 12 in one component. A near-dup pair
+    and a singleton keep the small-bucket path alive alongside it."""
+    base = " ".join(f"tok{i % 37}x{i % 11}" for i in range(60))
+    rows = [(f"https://hot.example/{i:04d}", base) for i in range(12)]
+    rows += [("https://a.example/1", "alpha beta gamma delta " * 12),
+             ("https://a.example/2", "alpha beta gamma delta " * 12),
+             ("https://b.example/1", "unrelated words entirely " * 9)]
+    pages = spark.createDataFrame(rows, "url string, text string")
+    cfg = PipelineConfig(num_perm=64, lsh_bands=16, jaccard_threshold=0.8,
+                         hot_bucket_limit=3)
+    sigs = signatures(pages, cfg).persist()
+    try:
+        pairs = candidate_pairs(sigs, cfg)
+        hot = F.col("url_a").startswith("https://hot.") & \
+            F.col("url_b").startswith("https://hot.")
+        assert pairs.filter(hot).count() == 11
+        edges = verify_pairs(pairs, sigs, cfg.jaccard_threshold, cfg) \
+            .select(F.col("url_a").alias("src"), F.col("url_b").alias("dst"))
+        clusters = {r["url"]: r["cluster_id"]
+                    for r in connected_components(edges).collect()}
+        hot_urls = [u for u, _ in rows[:12]]
+        assert {clusters.get(u) for u in hot_urls} == {hot_urls[0]}
+    finally:
+        sigs.unpersist()
+
+
 def _uf_oracle(edges):
     parent = {}
 
@@ -276,9 +307,11 @@ def test_simhash_identical_zero_hamming(spark):
     assert len(pairs) == 1 and pairs[0]["hamming"] == 0
 
 
-def test_full_pipeline_clusters_match_truth(spark, small_pages):
+def test_full_pipeline_clusters_match_truth(spark, small_pages, tmp_path):
     pages, truth = small_pages
-    got = dedup_clusters(pages, CFG)
+    got = run_resumable(spark, pages, CFG,
+                        ParquetWarehouse(spark, str(tmp_path / "wh")),
+                        input_id="small-corpus")
     got_groups = {frozenset(r["members"]) for r in
                   got.groupBy("cluster_id")
                   .agg(F.collect_set("url").alias("members")).collect()

@@ -12,6 +12,8 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "duplicate_finder_spark"
+#: source trees held to the compile and line-length checks
+SOURCES = (PKG, REPO / "jobs")
 
 
 def test_pyfiles_zip_builds_and_zipimports(tmp_path: Path) -> None:
@@ -37,14 +39,15 @@ def test_pyfiles_zip_builds_and_zipimports(tmp_path: Path) -> None:
 
 
 def test_source_compiles() -> None:
-    assert compileall.compile_dir(str(PKG), quiet=2, force=True)
+    for src in SOURCES:
+        assert compileall.compile_dir(str(src), quiet=2, force=True), src
 
 
 def test_max_line_length_80() -> None:
     """flake8 parity (max-line-length = 80, reference .flake8) without
     the flake8 binary."""
     offenders = []
-    for py in sorted(PKG.rglob("*.py")):
+    for py in sorted(p for src in SOURCES for p in src.rglob("*.py")):
         if "__pycache__" in py.parts:
             continue
         for i, line in enumerate(py.read_text().splitlines(), 1):
