@@ -278,7 +278,6 @@ def _write_report(report_path: str, title: str,
 def main(argv: list[str] | None = None) -> int:
     args = ArgumentParserAdapter().parse(argv)
     cfg = PipelineConfig(
-        pages_path=args.folder_path,
         include_patterns=args.include or None,
         exclude_patterns=args.exclude or None,
         min_size_str=args.min_size,

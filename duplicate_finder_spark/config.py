@@ -131,10 +131,6 @@ class PipelineConfig:
     shuffle parallelism; delete stays decision-first (dry-run default).
     """
 
-    # source
-    pages_path: str = ""
-    table_format: str = "parquet"          # "parquet" | "iceberg"
-
     # filters (F2-F4); *_str parsed via the strict config-layer rules
     include_patterns: Optional[list[str]] = None
     exclude_patterns: Optional[list[str]] = None
@@ -148,7 +144,6 @@ class PipelineConfig:
     num_perm: int = 128                    # MinHash permutations
     lsh_bands: int = 16                    # bands (rows = num_perm // bands)
     jaccard_threshold: float = 0.8         # verify-stage cutoff
-    simhash_bits: int = 64
     simhash_hamming_max: int = 3
     seed: int = 42
     # signature scheme: "kperm" = classic num_perm independent
@@ -160,10 +155,11 @@ class PipelineConfig:
 
     # skew controls (north rule: explicit partitioning/shuffle/skew handling)
     hot_bucket_limit: int = 2000           # docs per LSH bucket before salting
-    max_pairs_per_bucket: int = 5_000_000  # hard cap, logged when hit
 
-    # verify-stage payload bound: ship a bottom-k shingle sketch through the
-    # pair join instead of the full (unbounded) shingle array; pairs whose
+    # verify-stage payload bound: when some doc can exceed sketch_k
+    # shingles, the pair join ships a bottom-k shingle sketch instead of
+    # the full (unbounded) shingle array. The sketch is derived from
+    # ``shingles`` at the join, not stored with the signatures. Pairs whose
     # sketch-estimated Jaccard falls within ``verify_band`` of the threshold
     # are re-verified exactly.  Bottom-k Jaccard has stderr ≈ 1/sqrt(k)
     # (Broder 1997; Cohen & Kaplan 2007 bottom-k sketches), so the default

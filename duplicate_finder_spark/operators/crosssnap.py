@@ -43,9 +43,7 @@ from duplicate_finder_spark.config import PipelineConfig
 from duplicate_finder_spark.operators.components import connected_components
 from duplicate_finder_spark.operators.lsh import (
     band_hashes, incremental_candidate_pairs, verify_pairs)
-
-SIG_COLS = ["url", "shingles", "minhash", "n_shingles", "sketch",
-            "n_tokens"]
+from duplicate_finder_spark.operators.minhash import SIG_COLS
 
 
 def cross_snapshot_edges(new_sigs: DataFrame, store_sigs: DataFrame,

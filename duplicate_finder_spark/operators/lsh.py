@@ -155,6 +155,14 @@ def incremental_candidate_pairs(bands_new: DataFrame, bands_all: DataFrame,
     return pairs_small.unionByName(pairs_hot).distinct()
 
 
+def _sketch(shingles, k: int):
+    """Bottom-k sketch (Cohen & Kaplan 2007) of a shingle-hash array
+    column: its ``k`` smallest values under signed int64 order (a
+    uniform order for hashed values), ascending. For ≤ k shingles it is
+    the whole set, sorted."""
+    return F.slice(F.array_sort(shingles), 1, k)
+
+
 def verify_pairs(pairs: DataFrame, sigs: DataFrame, threshold: float,
                  cfg: PipelineConfig | None = None) -> DataFrame:
     """V1 generalized: Jaccard over hashed shingle sets, fully JVM-side
@@ -166,11 +174,13 @@ def verify_pairs(pairs: DataFrame, sigs: DataFrame, threshold: float,
     set-similarity check confirms LSH candidates before they enter
     connected components — this is what pins dup-pair precision.
 
-    Scale: the pair join ships only the bottom-k ``sketch`` column
-    (≤ cfg.sketch_k longs per side), never the unbounded ``shingles``
-    array — at web scale the verify stage's shuffle BYTES, not its row
-    count, are the bottleneck, and a hot doc with many candidate partners
-    re-ships its payload once per pair. Three per-pair regimes:
+    Scale: when some doc can exceed ``cfg.sketch_k`` shingles, the pair
+    join ships a bottom-k sketch (≤ cfg.sketch_k longs per side) that
+    is derived from ``shingles`` at the join (`_sketch`; it is not a
+    stored column), never the unbounded ``shingles`` array — at web
+    scale the verify stage's shuffle BYTES, not its row count, are the
+    bottleneck, and a hot doc with many candidate partners re-ships its
+    payload once per pair. Three per-pair regimes:
 
     * both docs ≤ sketch_k shingles → sketch == full set → EXACT Jaccard
       (all docs at test scale; bit-identical to the full-array path);
@@ -194,20 +204,6 @@ def verify_pairs(pairs: DataFrame, sigs: DataFrame, threshold: float,
     k = cfg.sketch_k if cfg is not None else 512
     band = (cfg.verify_band if cfg is not None and cfg.verify_band is not None
             else 3.0 / k ** 0.5)
-    sk = sigs
-    if "sketch" not in sk.columns:
-        sk = sk.withColumn("sketch", F.slice(F.array_sort("shingles"), 1, k))
-    a = sk.select(F.col("url").alias("url_a"),
-                  F.col("sketch").alias("sk_a"),
-                  F.col("n_shingles").alias("n_a"))
-    b = sk.select(F.col("url").alias("url_b"),
-                  F.col("sketch").alias("sk_b"),
-                  F.col("n_shingles").alias("n_b"))
-
-    inter = F.size(F.array_intersect("sk_a", "sk_b"))
-    union = F.col("n_a") + F.col("n_b") - inter
-    j_exact = F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-
     if "n_tokens" in sigs.columns:
         bound = sigs.agg(F.max("n_tokens")).first()[0]
         if bound is not None and bound <= k:
@@ -227,6 +223,16 @@ def verify_pairs(pairs: DataFrame, sigs: DataFrame, threshold: float,
                                  .otherwise(finter / funion))
                     .filter(F.col("jaccard") >= threshold)
                     .select("url_a", "url_b", "jaccard"))
+    a = sigs.select(F.col("url").alias("url_a"),
+                    _sketch("shingles", k).alias("sk_a"),
+                    F.col("n_shingles").alias("n_a"))
+    b = sigs.select(F.col("url").alias("url_b"),
+                    _sketch("shingles", k).alias("sk_b"),
+                    F.col("n_shingles").alias("n_b"))
+    inter = F.size(F.array_intersect("sk_a", "sk_b"))
+    union = F.col("n_a") + F.col("n_b") - inter
+    j_exact = F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
+
     # truncated estimate: |bottomk(A∪B) ∩ skA ∩ skB| / k — the union
     # has > k elements (at least one side truncated); sketches are
     # sorted, the union re-sorted JVM-side under the same signed-int64

@@ -126,37 +126,6 @@ def _minhash_block(sh_arrays: list[np.ndarray], a: np.ndarray,
     return out
 
 
-def make_signature_udf(k: int, num_perm: int, seed: int):
-    """Arrow UDF: array<long> token hashes → struct(shingles, minhash)."""
-    a, b = _perm_params(num_perm, seed)
-    out_type = StructType([
-        StructField("shingles", ArrayType(LongType())),
-        StructField("minhash", ArrayType(LongType())),
-    ])
-
-    @F.pandas_udf(out_type)
-    def signature(tok_hashes: pd.Series) -> pd.DataFrame:
-        sh_out: list = []
-        valid: list[np.ndarray] = []
-        valid_pos: list[int] = []
-        for i, row in enumerate(tok_hashes):
-            if row is None or len(row) == 0:
-                sh_out.append(None)
-                continue
-            toks = np.asarray(row, dtype=np.int64).view(np.uint64)
-            sh = shingle_hashes_np(toks, k)
-            sh_out.append(sh.view(np.int64))
-            valid.append(sh)
-            valid_pos.append(i)
-        mh_out: list = [None] * len(sh_out)
-        if valid:
-            for pos, mins in zip(valid_pos, _minhash_block(valid, a, b)):
-                mh_out[pos] = mins.view(np.int64)
-        return pd.DataFrame({"shingles": sh_out, "minhash": mh_out})
-
-    return signature
-
-
 # --- one-permutation hashing (OPH) -------------------------------------------
 # Li/Owen/Zhang 2012 "One Permutation Hashing"; densification per
 # Shrivastava/Li 2014 (ICML) "Improved Densification of One Permutation
@@ -228,11 +197,23 @@ def _oph_block(sh_arrays: list[np.ndarray], num_perm: int,
     return np.where(fill, sig, borrowed)
 
 
-def make_oph_signature_udf(k: int, num_perm: int, seed: int):
-    """Arrow UDF: array<long> token hashes → struct(shingles, minhash),
-    signature computed by one-permutation hashing + densification —
-    same output schema and downstream contract as `make_signature_udf`,
-    ~O(1) work per shingle instead of O(num_perm)."""
+def make_signature_udf(cfg: PipelineConfig):
+    """Arrow UDF: array<long> token hashes → struct(shingles, minhash).
+
+    ``cfg.sig_scheme`` picks the min-hash kernel: ``kperm`` runs
+    ``num_perm`` permutations per shingle (`_minhash_block`), ``oph``
+    one permutation plus densification (`_oph_block`, ~O(1) work per
+    shingle). Shingles, output schema and the downstream contract are
+    the same for both."""
+    k, num_perm, seed = cfg.shingle_size, cfg.num_perm, cfg.seed
+    if cfg.sig_scheme == "oph":
+        def kernel(sh_arrays):
+            return _oph_block(sh_arrays, num_perm, seed)
+    else:
+        a, b = _perm_params(num_perm, seed)
+
+        def kernel(sh_arrays):
+            return _minhash_block(sh_arrays, a, b)
     out_type = StructType([
         StructField("shingles", ArrayType(LongType())),
         StructField("minhash", ArrayType(LongType())),
@@ -254,9 +235,8 @@ def make_oph_signature_udf(k: int, num_perm: int, seed: int):
             valid_pos.append(i)
         mh_out: list = [None] * len(sh_out)
         if valid:
-            sigs = _oph_block(valid, num_perm, seed)
-            for j, pos in enumerate(valid_pos):
-                mh_out[pos] = sigs[j].view(np.int64)
+            for pos, mins in zip(valid_pos, kernel(valid)):
+                mh_out[pos] = mins.view(np.int64)
         return pd.DataFrame({"shingles": sh_out, "minhash": mh_out})
 
     return signature
@@ -300,18 +280,23 @@ def shingle_sets(docs: DataFrame, k: int, id_col: str = "doc_id",
             .withColumn("n", F.size("sh")))
 
 
+#: the stored signature row, as ``signatures`` emits it and the
+#: warehouse, the corpus store and the streaming store keep it. It holds
+#: only what cannot be derived: verify builds its bottom-k sketch from
+#: ``shingles`` at the pair join (operators/lsh.py::verify_pairs).
+SIG_COLS = ["url", "shingles", "minhash", "n_shingles", "n_tokens"]
+
+
 def signatures(pages: DataFrame, cfg: PipelineConfig,
                url_col: str = "url", text_col: str = "text") -> DataFrame:
-    """→ (url, n_shingles, shingles, minhash, sketch: array<long>).
+    """→ (url, n_tokens, shingles, minhash, n_shingles): the ``SIG_COLS``.
 
     Rows with zero tokens (blank docs) are excluded — exact dedup owns
     those (operators/exact.py).
 
-    ``sketch`` is the bottom-``cfg.sketch_k`` shingle hashes under signed
-    int64 order (a uniform order for hashed values), sorted ascending and
-    computed JVM-side — the verify stage ships THIS bounded column through
-    the pair join, never the unbounded ``shingles`` array.  For docs with
-    ≤ sketch_k shingles the sketch IS the (sorted) full set.
+    No bottom-k sketch is stored: it is a function of ``shingles``, and
+    the verify stage derives it at the pair join only when some doc can
+    exceed ``cfg.sketch_k`` shingles.
 
     ``n_tokens`` is computed JVM-side BEFORE the signature UDF: a plan
     that selects only it prunes the UDF entirely, so the verify stage's
@@ -319,11 +304,7 @@ def signatures(pages: DataFrame, cfg: PipelineConfig,
     n_shingles) is a cheap codegen'd scan, not an Arrow pass.
     """
     tok_hashes = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
-    if cfg.sig_scheme == "oph":
-        sig = make_oph_signature_udf(cfg.shingle_size, cfg.num_perm,
-                                     cfg.seed)
-    else:
-        sig = make_signature_udf(cfg.shingle_size, cfg.num_perm, cfg.seed)
+    sig = make_signature_udf(cfg)
     # blank-doc filter on the RAW text (see shingle_sets): exactly
     # equivalent to size(_th) > 0, but pushable to the scan for the
     # cost of a trim instead of a second full interpreted
@@ -337,6 +318,4 @@ def signatures(pages: DataFrame, cfg: PipelineConfig,
             .select("url", "n_tokens",
                     F.col("_sig.shingles").alias("shingles"),
                     F.col("_sig.minhash").alias("minhash"))
-            .withColumn("n_shingles", F.size("shingles"))
-            .withColumn("sketch",
-                        F.slice(F.array_sort("shingles"), 1, cfg.sketch_k)))
+            .withColumn("n_shingles", F.size("shingles")))

@@ -71,8 +71,7 @@ from duplicate_finder_spark.operators.minhash import signatures
 from duplicate_finder_spark.warehouse import ParquetWarehouse
 
 _SIG_SCHEMA = ("url string, ts timestamp, shingles array<long>, "
-               "minhash array<long>, n_shingles int, sketch array<long>, "
-               "n_tokens int")
+               "minhash array<long>, n_shingles int, n_tokens int")
 _EDGE_SCHEMA = "url_a string, url_b string, jaccard double, bucket int"
 
 _SIG_TABLE = "snd_signatures"
@@ -176,7 +175,7 @@ class StreamingNearDup:
                     .join(rows.select("url", "ts"), "url")
                     .select("url", "ts", "shingles", "minhash",
                             F.col("n_shingles").cast("int").alias(
-                                "n_shingles"), "sketch",
+                                "n_shingles"),
                             F.col("n_tokens").cast("int").alias("n_tokens"))
                     .persist())
         store = self._live_sigs(self.stored_signatures(), new_max_ts)

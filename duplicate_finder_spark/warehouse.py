@@ -34,6 +34,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -89,7 +90,32 @@ def _partition_histogram(df: DataFrame) -> list[int]:
             sorted(counts, key=lambda r: r["pid"])]
 
 
-class ParquetWarehouse:
+class _Warehouse:
+    """What both table formats derive from their own ``manifest``,
+    ``read`` and ``write``."""
+
+    manifest: Callable[[str], StageManifest | None]
+    read: Callable[..., DataFrame]
+    write: Callable[..., StageManifest]
+
+    def exists(self, name: str) -> bool:
+        return self.manifest(name) is not None
+
+    # -- resumability ----------------------------------------------------------
+
+    def checkpoint_or_compute(self, name: str, fingerprint: str,
+                              compute) -> tuple[DataFrame, bool]:
+        """Return (df, resumed): reuse the stored stage iff its manifest
+        fingerprint matches; else compute, persist, and return fresh."""
+        m = self.manifest(name)
+        if m is not None and m.fingerprint == fingerprint:
+            return self.read(name), True
+        df = compute()
+        self.write(df, name, stage=name, fingerprint=fingerprint)
+        return self.read(name), False
+
+
+class ParquetWarehouse(_Warehouse):
     """Local/HDFS-path warehouse with atomic snapshot-pointer semantics:
     each write lands in an immutable ``snapshot-<id>`` dir, then a
     ``current`` symlink is swapped via ``os.replace`` (atomic on POSIX)
@@ -215,9 +241,6 @@ class ParquetWarehouse:
         with open(path) as f:
             return StageManifest(**json.load(f))
 
-    def exists(self, name: str) -> bool:
-        return self.manifest(name) is not None
-
     def drop(self, name: str) -> None:
         d = self._table_dir(name)
         if os.path.exists(d):
@@ -229,21 +252,8 @@ class ParquetWarehouse:
         return sorted(n for n in os.listdir(self.root)
                       if self._current(n) is not None)
 
-    # -- resumability ----------------------------------------------------------
 
-    def checkpoint_or_compute(self, name: str, fingerprint: str,
-                              compute) -> tuple[DataFrame, bool]:
-        """Return (df, resumed): reuse the stored stage iff its manifest
-        fingerprint matches; else compute, persist, and return fresh."""
-        m = self.manifest(name)
-        if m is not None and m.fingerprint == fingerprint:
-            return self.read(name), True
-        df = compute()
-        self.write(df, name, stage=name, fingerprint=fingerprint)
-        return self.read(name), False
-
-
-class IcebergWarehouse:
+class IcebergWarehouse(_Warehouse):
     """Iceberg-backed implementation (same surface). Requires an Iceberg
     catalog on the session (``spark.sql.catalog.<catalog>`` configs +
     iceberg-spark-runtime jar); lineage rides Iceberg snapshot metadata
@@ -265,7 +275,7 @@ class IcebergWarehouse:
                 f"Iceberg catalog '{catalog}' is not configured on this "
                 f"session: set spark.sql.catalog.{catalog} (and the "
                 f"iceberg-spark-runtime jar) or use the parquet warehouse "
-                f"(table_format='parquet')")
+                f"(--format parquet)")
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.prefix}")
 
     def _fq(self, name: str) -> str:
@@ -302,9 +312,6 @@ class IcebergWarehouse:
             return None
         return StageManifest(**row[0].asDict()) if row else None
 
-    def exists(self, name: str) -> bool:
-        return self.manifest(name) is not None
-
     def drop(self, name: str) -> None:
         self.spark.sql(f"DROP TABLE IF EXISTS {self._fq(name)}")
         self.spark.sql(f"DROP TABLE IF EXISTS {self._fq(name + '_manifest')}")
@@ -315,15 +322,6 @@ class IcebergWarehouse:
         rows = self.spark.sql(f"SHOW TABLES IN {self.prefix}").collect()
         return sorted(r["tableName"] for r in rows
                       if not r["tableName"].endswith("_manifest"))
-
-    def checkpoint_or_compute(self, name: str, fingerprint: str,
-                              compute) -> tuple[DataFrame, bool]:
-        m = self.manifest(name)
-        if m is not None and m.fingerprint == fingerprint:
-            return self.read(name), True
-        df = compute()
-        self.write(df, name, stage=name, fingerprint=fingerprint)
-        return self.read(name), False
 
 
 def get_warehouse(spark: SparkSession, root_or_catalog: str,

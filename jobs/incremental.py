@@ -56,9 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duplicate_finder_spark.config import PipelineConfig
-from duplicate_finder_spark.operators.crosssnap import (
-    SIG_COLS, cross_snapshot_decisions)
-from duplicate_finder_spark.operators.minhash import signatures
+from duplicate_finder_spark.operators.crosssnap import cross_snapshot_decisions
+from duplicate_finder_spark.operators.minhash import SIG_COLS, signatures
 from duplicate_finder_spark.store import (STORE_PREFIX, commit_batch,
                                           compact_store, gc_store)
 from duplicate_finder_spark.store import read_store as _read_store

@@ -16,7 +16,10 @@ from duplicate_finder_spark.operators.crosssnap import (
     cross_snapshot_apply, cross_snapshot_decisions, cross_snapshot_edges)
 from duplicate_finder_spark.operators.lsh import (
     band_hashes, incremental_candidate_pairs)
-from duplicate_finder_spark.operators.minhash import signatures
+from duplicate_finder_spark.operators.minhash import SIG_COLS, signatures
+from duplicate_finder_spark.store import (STORE_PREFIX, commit_batch,
+                                          read_store)
+from duplicate_finder_spark.warehouse import ParquetWarehouse
 
 CFG = PipelineConfig(num_perm=128, lsh_bands=32, jaccard_threshold=0.8)
 
@@ -48,6 +51,40 @@ def test_decisions_cover_all_regimes(spark):
     assert got["n2"] == ("keep", "cluster_rep", "n2")
     assert got["n3"] == ("delete", "dup_in_batch", "n2")
     assert got["n4"] == ("keep", "unique", "n4")
+
+
+def test_ingest_against_store_with_stored_sketch(spark, tmp_path):
+    """A corpus_sigs__ table in the old six-column format (with the
+    bottom-k ``sketch`` column signatures no longer store) still reads
+    through read_store and decides as in the regime test above; the
+    kept batch it is committed next to unions with it."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    old = (_sigs(spark, [("s1", _doc("a")), ("s2", _doc("b"))])
+           .withColumn("sketch", F.slice(F.array_sort("shingles"), 1,
+                                         CFG.sketch_k))
+           .select("url", "shingles", "minhash", "n_shingles", "sketch",
+                   "n_tokens"))
+    m = wh.write(old, STORE_PREFIX + "old", stage="store_batch")
+    commit_batch(wh, spark, "old", m.rows)
+
+    new = _sigs(spark, [("n1", _doc("a")), ("n2", _doc("c")),
+                        ("n3", _doc("c")), ("n4", _doc("d"))])
+    store = read_store(wh, new, SIG_COLS)
+    decided = cross_snapshot_decisions(new, store, CFG)
+    got = {r["url"]: (r["action"], r["reason"], r["cluster_id"])
+           for r in decided.collect()}
+    assert got == {"n1": ("delete", "dup_of_corpus", "n1"),
+                   "n2": ("keep", "cluster_rep", "n2"),
+                   "n3": ("delete", "dup_in_batch", "n2"),
+                   "n4": ("keep", "unique", "n4")}
+
+    dropped = decided.filter(F.col("action") == "delete").select("url")
+    kept = wh.write(new.select(*SIG_COLS).join(dropped, "url", "left_anti"),
+                    STORE_PREFIX + "new", stage="store_batch")
+    commit_batch(wh, spark, "new", kept.rows)
+    after = read_store(wh, new, SIG_COLS)
+    assert after.columns == SIG_COLS
+    assert {r["url"] for r in after.collect()} == {"s1", "s2", "n2", "n4"}
 
 
 def test_transitive_store_link_deletes_whole_new_chain(spark):

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from duplicate_finder_spark.config import PipelineConfig
 from duplicate_finder_spark.operators import components as comp
 from duplicate_finder_spark.operators.components import connected_components
-from duplicate_finder_spark.operators.lsh import (band_hashes,
+from duplicate_finder_spark.operators.lsh import (_sketch, band_hashes,
                                                   candidate_pairs,
                                                   verify_pairs)
 from duplicate_finder_spark.operators.minhash import signatures
@@ -107,7 +107,8 @@ def test_sketch_bounds_verify_payload_on_long_docs(spark):
     ]
     df = spark.createDataFrame(rows, "url string, text string")
     sigs = signatures(df, cfg)
-    agg = sigs.agg(F.max(F.size("sketch")).alias("mx"),
+    agg = sigs.agg(F.max(F.size(_sketch("shingles", cfg.sketch_k)))
+                   .alias("mx"),
                    F.max("n_shingles").alias("mn")).first()
     assert agg["mx"] == cfg.sketch_k, "sketch must be capped at sketch_k"
     assert agg["mn"] > cfg.sketch_k, "fixture docs must exceed sketch_k"
@@ -127,6 +128,42 @@ def test_sketch_bounds_verify_payload_on_long_docs(spark):
         # borderline pairs return the exact value; estimate-decided pairs
         # are within the 3-sigma band of it
         assert abs(got[p] - j) <= cfg.verify_band + 1e-9
+
+
+def test_truncated_verify_matches_full_set_jaccard(spark):
+    """Differential test of verify's truncated path: 30 seeded docs of
+    600 distinct tokens (598 shingles, all above sketch_k = 256) share
+    a prefix of a common base, so pair Jaccard spreads over 0.5-1.0.
+    With every pair as a candidate, the kept set equals the one from
+    full-set Jaccard in Python, and each returned jaccard is within
+    verify_band of the true value."""
+    cfg = PipelineConfig(num_perm=128, lsh_bands=32,
+                         jaccard_threshold=0.8, sketch_k=256)
+    rng = random.Random(20)
+    base = [f"b{i}" for i in range(600)]
+    docs = {}
+    for d in range(30):
+        p = rng.randint(400, 600)
+        docs[f"d{d:02d}"] = base[:p] + [f"u{d}x{i}" for i in range(600 - p)]
+    sets = {u: {tuple(t[i:i + 3]) for i in range(len(t) - 2)}
+            for u, t in docs.items()}
+    cand = list(itertools.combinations(sorted(docs), 2))
+    truth = {(a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+             for a, b in cand}
+    thr = cfg.jaccard_threshold
+    # the fixture reaches both sides of the threshold and its band
+    assert min(truth.values()) < 0.55 and max(truth.values()) > 0.95
+    assert any(abs(j - thr) < cfg.verify_band for j in truth.values())
+
+    df = spark.createDataFrame([(u, " ".join(t)) for u, t in docs.items()],
+                               "url string, text string")
+    pairs = spark.createDataFrame(cand, "url_a string, url_b string")
+    got = {(r["url_a"], r["url_b"]): r["jaccard"]
+           for r in verify_pairs(pairs, signatures(df, cfg), thr,
+                                 cfg).collect()}
+    assert set(got) == {p for p, j in truth.items() if j >= thr}
+    for p, j in got.items():
+        assert abs(j - truth[p]) <= cfg.verify_band + 1e-9, p
 
 
 def test_verify_pairs_releases_all_persists(spark, monkeypatch):

@@ -13,7 +13,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "duplicate_finder_spark"
 #: source trees held to the compile and line-length checks
-SOURCES = (PKG, REPO / "jobs")
+SOURCES = (PKG, REPO / "jobs", REPO / "perfbench", REPO / "tools")
 
 
 def test_pyfiles_zip_builds_and_zipimports(tmp_path: Path) -> None:

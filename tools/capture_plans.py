@@ -37,8 +37,10 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         n_ex = plan.count("Exchange")
-        n_py = (plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
-                + plan.count("MapInArrow") + plan.count("FlatMapGroupsInPandas"))
+        n_py = (plan.count("ArrowEvalPython")
+                + plan.count("BatchEvalPython")
+                + plan.count("MapInArrow")
+                + plan.count("FlatMapGroupsInPandas"))
         print(f"{name}: exchanges={n_ex} python_nodes={n_py} -> {path}")
         spark.catalog.clearCache()
     spark.stop()
