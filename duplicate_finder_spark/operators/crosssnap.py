@@ -163,6 +163,12 @@ def cross_snapshot_apply(new_sigs: DataFrame, store_sigs: DataFrame,
     candidate/verify/components chain."""
     if decisions is None:
         decisions = cross_snapshot_decisions(new_sigs, store_sigs, cfg)
+    return store_sigs.select(*SIG_COLS).unionByName(
+        kept_signatures(new_sigs, decisions))
+
+
+def kept_signatures(new_sigs: DataFrame, decisions: DataFrame) -> DataFrame:
+    """The new batch's signatures minus the urls ``decisions`` delete —
+    the rows an ingest appends to the store."""
     dropped = decisions.filter(F.col("action") == "delete").select("url")
-    kept_new = new_sigs.select(*SIG_COLS).join(dropped, "url", "left_anti")
-    return store_sigs.select(*SIG_COLS).unionByName(kept_new)
+    return new_sigs.select(*SIG_COLS).join(dropped, "url", "left_anti")

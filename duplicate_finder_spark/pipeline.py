@@ -55,6 +55,37 @@ METRICS_SCHEMA = pa.schema([("stage", pa.string()), ("rows", pa.int64()),
                             ("fingerprint", pa.string())])
 
 
+class StageRecorder:
+    """Stage checkpoints plus their ``metrics_<fp>`` table (one row per
+    stage), shared by ``run_resumable`` and jobs/curate.py."""
+
+    def __init__(self, warehouse, fp: str):
+        self.warehouse, self.fp, self.rows = warehouse, fp, []
+
+    def staged(self, name: str, compute) -> DataFrame:
+        """``compute()`` checkpointed as ``<name>_<fp>``, resumed when
+        its fingerprint matches; records the stage's row."""
+        t0, table = time.time(), f"{name}_{self.fp}"
+        df, resumed = self.warehouse.checkpoint_or_compute(table, self.fp,
+                                                           compute)
+        self.record(name, self.warehouse.manifest(table).rows, t0, resumed)
+        return df
+
+    def record(self, name: str, rows: int, t0: float,
+               resumed: bool = False) -> None:
+        """Row of a stage started at ``t0`` (also for uncheckpointed
+        stages)."""
+        self.rows.append({"stage": name, "rows": rows,
+                          "wall_sec": round(time.time() - t0, 3),
+                          "resumed": resumed, "fingerprint": self.fp})
+
+    def write(self, spark: SparkSession) -> None:
+        self.warehouse.write(
+            spark.createDataFrame(
+                pa.Table.from_pylist(self.rows, schema=METRICS_SCHEMA)),
+            f"metrics_{self.fp}", stage="metrics", fingerprint=self.fp)
+
+
 def config_fingerprint(cfg: PipelineConfig, input_id: str) -> str:
     """Deterministic stage-cache key from (pinned config, input id)."""
     payload = json.dumps({
@@ -84,16 +115,8 @@ def run_resumable(spark: SparkSession, pages: DataFrame,
     executor loss mid-stage, not just between stages.
     """
     fp = config_fingerprint(cfg, input_id)
-    metrics: list[dict] = []
-
-    def staged(name: str, compute):
-        t0 = time.time()
-        df, resumed = warehouse.checkpoint_or_compute(f"{name}_{fp}", fp,
-                                                      compute)
-        metrics.append({"stage": name, "rows": warehouse.manifest(
-            f"{name}_{fp}").rows, "wall_sec": round(time.time() - t0, 3),
-            "resumed": resumed, "fingerprint": fp})
-        return df
+    recorder = StageRecorder(warehouse, fp)
+    staged = recorder.staged
 
     filtered = ex.apply_filters(pages, cfg)
     sigs = staged("signatures", lambda: signatures(filtered, cfg))
@@ -120,12 +143,6 @@ def run_resumable(spark: SparkSession, pages: DataFrame,
               .withColumn("rank", F.row_number().over(w)))
     t0 = time.time()
     decisions = decide(ranked, keep_overrides)
-    metrics.append({"stage": "decisions", "rows": decisions.count(),
-                    "wall_sec": round(time.time() - t0, 3),
-                    "resumed": False, "fingerprint": fp})
-
-    warehouse.write(
-        spark.createDataFrame(
-            pa.Table.from_pylist(metrics, schema=METRICS_SCHEMA)),
-        f"metrics_{fp}", stage="metrics", fingerprint=fp)
+    recorder.record("decisions", decisions.count(), t0)
+    recorder.write(spark)
     return decisions

@@ -1,6 +1,7 @@
 """Corpus signature store for the incremental (cross-snapshot) dedup
-workflow — the append-only layout jobs/incremental.py commits into,
-plus its maintenance operations (compaction, orphan GC).
+workflow — the append-only layout, the ingest that commits a batch into
+it (``ingest_batch``), and its maintenance operations (compaction,
+orphan GC).
 
 Layout: the kept corpus is the union of per-batch signature tables
 ``corpus_sigs__<batch-id>`` listed in a tiny ``corpus_batches``
@@ -53,9 +54,12 @@ from __future__ import annotations
 import hashlib
 import time
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from duplicate_finder_spark.config import PipelineConfig
+from duplicate_finder_spark.operators import crosssnap, minhash
 
 STORE_PREFIX = "corpus_sigs__"
 REGISTRY = "corpus_batches"
@@ -100,6 +104,80 @@ def commit_batch(wh, spark: SparkSession, batch_id: str,
         prior + [(batch_id, rows, time.time())], REGISTRY_SCHEMA)
     wh.write(reg, REGISTRY, stage="registry", fingerprint=batch_id)
     return prior
+
+
+class Ingest(NamedTuple):
+    """What ``ingest_batch`` committed."""
+    decisions: DataFrame  #: the materialized ``incr_decisions_<id>``
+    n_decided: int        #: new urls decided
+    n_kept: int           #: rows appended to the store
+    prior: list[tuple]    #: registry rows of the other batches
+
+
+def ingest_batch(spark: SparkSession, wh, pages: DataFrame, batch_id: str,
+                 cfg: PipelineConfig, bloom_fpp: float | None = None
+                 ) -> Ingest:
+    """Dedup one new crawl batch against the kept corpus and commit its
+    survivors. Each run:
+
+    1. signs the new batch (store signatures are read, never
+       recomputed);
+    2. decides keep/delete per new doc — incumbents win components they
+       touch, new-only clusters keep-first, store×store pairs never
+       generated (operators/crosssnap.py);
+    3. writes ``incr_decisions_<batch-id>`` (the audit/deletion report);
+    4. writes the batch's KEPT signatures as ``corpus_sigs__<batch-id>``;
+    5. commits the batch into the registry (the last write = the commit
+       point: a crash anywhere earlier leaves the corpus exactly as it
+       was, and the rerun redoes the batch from scratch).
+
+    Reruns of the same ``batch_id`` are safe and idempotent: the store
+    read EXCLUDES the current batch id, so a crash between steps 4 and 5
+    (or a deliberate reprocess of a published batch) recomputes against
+    the same incumbent set and overwrites the batch's tables via
+    snapshot swap. An empty registry dedups the batch within itself and
+    seeds the corpus. Batch urls must be globally unique across
+    snapshots (url is the document identity).
+
+    ``bloom_fpp`` enables the broadcast Bloom-filter re-crawl prefilter
+    at that false-positive rate (operators/bloomfilter.py); decisions
+    are identical with and without it.
+    """
+    if "/" in batch_id:
+        raise ValueError(f"batch id must not contain '/': {batch_id!r}")
+    # persisted across its consumers (decisions + the kept-new
+    # anti-join below) — O(batch) rows; released after the last use
+    new_sigs = minhash.signatures(pages, cfg).persist()
+    store_sigs = read_store(wh, new_sigs, minhash.SIG_COLS,
+                            exclude=batch_id)
+
+    store_bloom = None
+    if bloom_fpp is not None:
+        # registry rows give the store size without scanning it; the
+        # build itself shuffles ≤ m/64 word rows
+        from duplicate_finder_spark.operators.bloomfilter import BloomFilter
+        n_store = sum(n for _, n, _ in registry_rows(wh, exclude=batch_id))
+        if n_store:
+            store_bloom = BloomFilter.build(
+                store_sigs.select("url"), "url", n_expected=n_store,
+                fpp=bloom_fpp)
+
+    decisions = crosssnap.cross_snapshot_decisions(
+        new_sigs, store_sigs, cfg, store_bloom=store_bloom)
+    dec_manifest = wh.write(decisions, f"incr_decisions_{batch_id}",
+                            stage="incr_decisions", fingerprint=batch_id)
+    # reuse the MATERIALIZED decisions: the kept rows are one anti-join,
+    # not a recompute of the candidate/verify/components chain
+    decided = wh.read(f"incr_decisions_{batch_id}")
+    kept_manifest = wh.write(crosssnap.kept_signatures(new_sigs, decided),
+                             STORE_PREFIX + batch_id, stage="store_batch",
+                             fingerprint=batch_id)
+    new_sigs.unpersist()
+    # the COMMIT: one registry row per batch; a rerun of the same batch
+    # id replaces its row (and moves it to the end — the reprocessed
+    # batch is now the newest arrival)
+    prior = commit_batch(wh, spark, batch_id, kept_manifest.rows)
+    return Ingest(decided, dec_manifest.rows, kept_manifest.rows, prior)
 
 
 def compact_store(wh, spark: SparkSession, columns: list[str],

@@ -181,8 +181,9 @@ class StreamingNearDup:
         store = self._live_sigs(self.stored_signatures(), new_max_ts)
         sigs_all = sigs_new.unionByName(store)
 
-        pairs = self._incremental_candidates(
-            band_hashes(sigs_new, cfg), band_hashes(sigs_all, cfg))
+        pairs = incremental_candidate_pairs(
+            band_hashes(sigs_new, cfg), band_hashes(sigs_all, cfg),
+            cfg.hot_bucket_limit)
         verified = self._with_bucket(
             verify_pairs(pairs, sigs_all, cfg.jaccard_threshold, cfg))
         # dedup against history, scanning ONLY the touched buckets: the
@@ -201,20 +202,6 @@ class StreamingNearDup:
 
         if self.compact_every and (batch_id + 1) % self.compact_every == 0:
             self.compact(new_max_ts)
-
-    def _incremental_candidates(self, bands_new: DataFrame,
-                                bands_all: DataFrame) -> DataFrame:
-        """(new ⋈ all) band-collision pairs, url_a < url_b — the shared
-        incremental kernel (operators/lsh.py::incremental_candidate_pairs,
-        also the batch cross-snapshot engine's): old×old pairs are never
-        recomputed, the census window is pruned to buckets the new batch
-        touches (bucket sizes still count the FULL live bucket, so
-        boilerplate accumulating across batches still trips the hot
-        cap), and a new arrival that BECOMES a hot bucket's rep links to
-        the second-smallest url so the star cannot fragment when the
-        representative drifts across batches (r3 ADVICE)."""
-        return incremental_candidate_pairs(
-            bands_new, bands_all, self.cfg.hot_bucket_limit)
 
     # -- compaction ---------------------------------------------------------
 

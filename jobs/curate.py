@@ -31,7 +31,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +41,7 @@ from duplicate_finder_spark.operators.curation import (decontaminate,
 from duplicate_finder_spark.operators.exact_substr import exact_substr_apply
 from duplicate_finder_spark.operators.paragraphs import paragraph_dedup_apply
 from duplicate_finder_spark.operators.sampling import token_budget_sample
+from duplicate_finder_spark.pipeline import StageRecorder
 from duplicate_finder_spark.warehouse import get_warehouse
 
 
@@ -237,17 +237,8 @@ def main(argv: list[str] | None = None) -> int:
 
         wh = get_warehouse(spark, args.warehouse, fmt=args.format)
         fp = _fingerprint(args)
-        metrics: list[dict] = []
-
-        def staged(name, compute):
-            t0 = time.time()
-            df, resumed = wh.checkpoint_or_compute(f"{name}_{fp}", fp,
-                                                   compute)
-            metrics.append({
-                "stage": name, "rows": wh.manifest(f"{name}_{fp}").rows,
-                "wall_sec": round(time.time() - t0, 3),
-                "resumed": resumed, "fingerprint": fp})
-            return df
+        recorder = StageRecorder(wh, fp)
+        staged = recorder.staged
 
         base = train
         if args.domain_blocklist:
@@ -394,19 +385,13 @@ def main(argv: list[str] | None = None) -> int:
             staged("mixture", _mix)
 
         manifest = wh.write(cur, "curated", stage="curated", fingerprint=fp)
-        wh.write(
-            spark.createDataFrame(metrics,
-                                  schema=("stage string, rows long, "
-                                          "wall_sec double, "
-                                          "resumed boolean, "
-                                          "fingerprint string")),
-            f"metrics_{fp}", stage="metrics", fingerprint=fp)
+        recorder.write(spark)
         print(json.dumps({
             "rows": manifest.rows,
             "n_partitions": manifest.n_partitions,
             "skew_ratio": round(manifest.skew_ratio, 3),
             "funnel": [{"stage": m["stage"], "rows": m["rows"],
-                        "resumed": m["resumed"]} for m in metrics],
+                        "resumed": m["resumed"]} for m in recorder.rows],
         }))
         return 0
     finally:

@@ -10,12 +10,14 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
+REPO = Path(__file__).resolve().parents[1]
 CMD = [sys.executable, "tools/check_oracles.py"]
 
 
 def _run(*extra: str) -> subprocess.CompletedProcess:
-    return subprocess.run(CMD + list(extra), cwd="/root/repo",
+    return subprocess.run(CMD + list(extra), cwd=str(REPO),
                           capture_output=True, text=True, timeout=300)
 
 

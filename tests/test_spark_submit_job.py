@@ -191,12 +191,13 @@ def test_spark_submit_incremental_job_two_snapshots(spark,
     assert second["store_rows"] == 4  # s1 s2 + kept n2 n4
     assert second["n_store_batches"] == 2
 
-    from jobs.incremental import read_store
+    from duplicate_finder_spark.operators.minhash import SIG_COLS
+    from duplicate_finder_spark.store import read_store
     from duplicate_finder_spark.warehouse import get_warehouse
     whh = get_warehouse(spark, wh)
     store = read_store(whh, spark.createDataFrame(
         [], "url string, shingles array<long>, minhash array<long>, "
-            "n_shingles int, sketch array<long>, n_tokens int"))
+            "n_shingles int, sketch array<long>, n_tokens int"), SIG_COLS)
     assert {r["url"] for r in store.select("url").collect()} == \
         {"s1", "s2", "n2", "n4"}
     dec = whh.read("incr_decisions_2026-02")
@@ -230,7 +231,7 @@ def test_spark_submit_incremental_job_two_snapshots(spark,
     assert compacted["folded"] == 2
     assert compacted["store_batches"] == 1
     assert compacted["merged_rows"] == 4
-    store2 = read_store(whh, store)
+    store2 = read_store(whh, store, SIG_COLS)
     assert {r["url"] for r in store2.select("url").collect()} == \
         {"s1", "s2", "n2", "n4"}
 

@@ -2,7 +2,8 @@
 Spark AND its oracle_sql() on DuckDB, compare row count, column names,
 and an order-insensitive value hash.
 
-Usage: PYTHONPATH=/root/repo python tools/check_oracles.py [sf_dir] [name...]
+Usage: python tools/check_oracles.py [sf_dir] [name...]  (the engine is
+imported from the checkout this script lives in)
 """
 
 from __future__ import annotations
@@ -10,11 +11,12 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
