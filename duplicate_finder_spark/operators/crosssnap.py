@@ -89,66 +89,67 @@ def cross_snapshot_decisions(new_sigs: DataFrame, store_sigs: DataFrame,
     caller_cached = new_sigs.is_cached  # don't drop a caller's cache
     if not caller_cached:
         new_sigs = new_sigs.persist()
-    if store_bloom is not None:
-        # broadcast-bitmap prefilter (operators/bloomfilter.py): bloom
-        # negatives are DEFINITELY new and skip the store join; only
-        # the maybe slice (overlap + ~fpp of the batch) probes the
-        # store's urls — the store is never shuffled for the re-crawl
-        # probe. Result is exactly the semi/anti split below.
-        from duplicate_finder_spark.operators.bloomfilter import (
-            split_by_membership)
-        re_rows, arrivals = split_by_membership(
-            new_sigs, store_url_set, store_bloom, "url")
-        recrawled = re_rows.select(
-            "url", F.col("url").alias("cluster_id"),
-            F.lit("delete").alias("action"),
-            F.lit("dup_of_corpus").alias("reason"))
-    else:
-        recrawled = (new_sigs.select("url")
-                     .join(store_url_set, "url", "left_semi")
-                     .select("url", F.col("url").alias("cluster_id"),
-                             F.lit("delete").alias("action"),
-                             F.lit("dup_of_corpus").alias("reason")))
-        arrivals = new_sigs.join(store_url_set, "url", "left_anti")
+    try:
+        if store_bloom is not None:
+            # broadcast-bitmap prefilter (operators/bloomfilter.py): bloom
+            # negatives are DEFINITELY new and skip the store join; only
+            # the maybe slice (overlap + ~fpp of the batch) probes the
+            # store's urls — the store is never shuffled for the re-crawl
+            # probe. Result is exactly the semi/anti split below.
+            from duplicate_finder_spark.operators.bloomfilter import (
+                split_by_membership)
+            re_rows, arrivals = split_by_membership(
+                new_sigs, store_url_set, store_bloom, "url")
+            recrawled = re_rows.select(
+                "url", F.col("url").alias("cluster_id"),
+                F.lit("delete").alias("action"),
+                F.lit("dup_of_corpus").alias("reason"))
+        else:
+            recrawled = (new_sigs.select("url")
+                         .join(store_url_set, "url", "left_semi")
+                         .select("url", F.col("url").alias("cluster_id"),
+                                 F.lit("delete").alias("action"),
+                                 F.lit("dup_of_corpus").alias("reason")))
+            arrivals = new_sigs.join(store_url_set, "url", "left_anti")
 
-    edges = cross_snapshot_edges(arrivals, store_sigs, cfg)
-    assign = connected_components(
-        edges.select(F.col("url_a").alias("src"),
-                     F.col("url_b").alias("dst")))
+        edges = cross_snapshot_edges(arrivals, store_sigs, cfg)
+        assign = connected_components(
+            edges.select(F.col("url_a").alias("src"),
+                         F.col("url_b").alias("dst")))
 
-    new_urls = arrivals.select("url")
-    store_urls = store_sigs.select("url").withColumn(
-        "_store", F.lit(True))
+        new_urls = arrivals.select("url")
+        store_urls = store_sigs.select("url").withColumn(
+            "_store", F.lit(True))
 
-    marked = assign.join(store_urls, "url", "left")
-    comp = marked.groupBy("cluster_id").agg(
-        F.max(F.coalesce("_store", F.lit(False))).alias("has_store"),
-        F.min(F.when(F.col("_store").isNull(), F.col("url")))
-         .alias("first_new"))
+        marked = assign.join(store_urls, "url", "left")
+        comp = marked.groupBy("cluster_id").agg(
+            F.max(F.coalesce("_store", F.lit(False))).alias("has_store"),
+            F.min(F.when(F.col("_store").isNull(), F.col("url")))
+             .alias("first_new"))
 
-    in_cc = (assign.join(new_urls, "url", "left_semi")
-             .join(comp, "cluster_id"))
-    action = (F.when(F.col("has_store"), "delete")
-               .when(F.col("url") == F.col("first_new"), "keep")
-               .otherwise("delete"))
-    reason = (F.when(F.col("has_store"), "dup_of_corpus")
-               .when(F.col("url") == F.col("first_new"), "cluster_rep")
-               .otherwise("dup_in_batch"))
-    decided = in_cc.select("url", "cluster_id",
-                           action.alias("action"), reason.alias("reason"))
+        in_cc = (assign.join(new_urls, "url", "left_semi")
+                 .join(comp, "cluster_id"))
+        action = (F.when(F.col("has_store"), "delete")
+                   .when(F.col("url") == F.col("first_new"), "keep")
+                   .otherwise("delete"))
+        reason = (F.when(F.col("has_store"), "dup_of_corpus")
+                   .when(F.col("url") == F.col("first_new"), "cluster_rep")
+                   .otherwise("dup_in_batch"))
+        decided = in_cc.select("url", "cluster_id",
+                               action.alias("action"), reason.alias("reason"))
 
-    singles = (new_urls.join(assign.select("url"), "url", "left_anti")
-               .select("url", F.col("url").alias("cluster_id"),
-                       F.lit("keep").alias("action"),
-                       F.lit("unique").alias("reason")))
-    # materialize the O(batch) narrow decision rows, then release the
-    # cached batch signatures — callers get a checkpointed result that
-    # never re-executes the signature UDF
-    out = (decided.unionByName(singles).unionByName(recrawled)
-           .localCheckpoint(eager=True))
-    if not caller_cached:
-        new_sigs.unpersist()
-    return out
+        singles = (new_urls.join(assign.select("url"), "url", "left_anti")
+                   .select("url", F.col("url").alias("cluster_id"),
+                           F.lit("keep").alias("action"),
+                           F.lit("unique").alias("reason")))
+        # materialize the O(batch) narrow decision rows, then release the
+        # cached batch signatures — callers get a checkpointed result that
+        # never re-executes the signature UDF
+        return (decided.unionByName(singles).unionByName(recrawled)
+                .localCheckpoint(eager=True))
+    finally:
+        if not caller_cached:
+            new_sigs.unpersist()
 
 
 def cross_snapshot_apply(new_sigs: DataFrame, store_sigs: DataFrame,

@@ -11,11 +11,12 @@ Settings rationale (scale-first, per SURVEY.md §4):
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from duplicate_finder_spark.config import normalize_parallelism
+from duplicate_finder_spark.config import PipelineConfig, normalize_parallelism
 
 
 def get_spark(app_name: str = "duplicate-finder-spark",
@@ -45,3 +46,36 @@ def get_spark(app_name: str = "duplicate-finder-spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def job_session(app: str) -> SparkSession:
+    """A spark-submit job's session: ``getOrCreate`` keeps every
+    ``--conf`` (executors, shuffle partitions, Iceberg catalogs); only
+    the workload-semantic defaults (AQE, skew join, Arrow) are set."""
+    return (SparkSession.builder
+            .appName(f"duplicate-finder-spark:{app}")
+            .config("spark.sql.adaptive.enabled", "true")
+            .config("spark.sql.adaptive.skewJoin.enabled", "true")
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .getOrCreate())
+
+
+def job_config(path: str | None) -> PipelineConfig:
+    """A job's ``--config``: a JSON file of PipelineConfig overrides."""
+    if not path:
+        return PipelineConfig()
+    with open(path) as f:
+        return PipelineConfig(**json.load(f))
+
+
+def read_pages(spark: SparkSession, path: str, fmt: str) -> DataFrame:
+    """A job's ``--input``: parquet path, Iceberg ``catalog.ns.table``,
+    or a directory of .warc/.warc.gz segments (text extracted)."""
+    if fmt == "iceberg":
+        return spark.table(path)
+    if fmt == "warc":
+        from duplicate_finder_spark.functions.extraction import (
+            with_extracted_text)
+        from duplicate_finder_spark.sources.warc import read_warc
+        return with_extracted_text(read_warc(spark, path))
+    return spark.read.parquet(path)

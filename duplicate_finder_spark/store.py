@@ -4,12 +4,12 @@ it (``ingest_batch``), and its maintenance operations (compaction,
 orphan GC).
 
 Layout: the kept corpus is the union of per-batch signature tables
-``corpus_sigs__<batch-id>`` listed in a tiny ``corpus_batches``
-registry table (batch_id, rows, committed_at). Each ingest run writes
-O(batch) rows — its kept survivors — and commits them with one registry
-row; the incumbent corpus is read but never rewritten. This is
-Iceberg's append-snapshot pattern expressed on the warehouse facade's
-atomic-swap primitive.
+``corpus_sigs__<batch-id>`` listed by the ``corpus_registry`` document:
+``[batch_id, rows]`` pairs in commit order, read and committed on the
+driver (the warehouse's ``read_json``/``write_json``). Each ingest run
+writes O(batch) rows — its kept survivors — and commits them by
+rewriting that list; the incumbent corpus is read but never rewritten
+(Iceberg's append-snapshot pattern on the facade's atomic swap).
 
 Why compaction exists: after B batches the store is B tables, so every
 read is a B-way ``unionByName`` — B scan legs in the plan, B× the
@@ -28,9 +28,8 @@ the read contract identical:
    deterministic, so a crashed compaction rerun rewrites the same
    table and fingerprint instead of orphaning a half-built one);
 3. the registry is rewritten — the ONE commit point — with the merged
-   row carrying the OLDEST folded ``committed_at`` (the merged block
-   stays ordered before every surviving batch, preserving
-   oldest-first read order);
+   entry first, in the folded batches' place, so the list stays in
+   oldest-first order;
 4. the folded tables are dropped (post-commit GC; a crash between 3
    and 4 leaves unreferenced tables that ``gc_store`` removes later).
 
@@ -52,7 +51,6 @@ exactly one copy) but almost never what an operator wants — keep
 from __future__ import annotations
 
 import hashlib
-import time
 from functools import reduce
 from typing import NamedTuple
 
@@ -60,15 +58,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from duplicate_finder_spark.config import PipelineConfig
 from duplicate_finder_spark.operators import crosssnap, minhash
+from duplicate_finder_spark.operators.bloomfilter import BloomFilter
 
 STORE_PREFIX = "corpus_sigs__"
-REGISTRY = "corpus_batches"
-REGISTRY_SCHEMA = "batch_id string, rows long, committed_at double"
+REGISTRY = "corpus_registry"
 
 
 def store_batches(wh, exclude: str | None = None) -> list[str]:
     """Committed batch ids from the registry, oldest first."""
-    return [b for b, _, _ in registry_rows(wh, exclude)]
+    return [b for b, _ in registry_rows(wh, exclude)]
 
 
 def read_store(wh, template: DataFrame, columns: list[str],
@@ -84,25 +82,26 @@ def read_store(wh, template: DataFrame, columns: list[str],
 
 
 def registry_rows(wh, exclude: str | None = None) -> list[tuple]:
-    """(batch_id, rows, committed_at) tuples, oldest first."""
-    if not wh.exists(REGISTRY):
-        return []
-    return sorted(
-        ((r["batch_id"], r["rows"], r["committed_at"])
-         for r in wh.read(REGISTRY).collect()
-         if r["batch_id"] != exclude),
-        key=lambda t: t[2])
+    """(batch_id, rows) pairs in commit order, oldest first."""
+    entries = wh.read_json(REGISTRY)
+    if entries is None and wh.exists("corpus_batches"):
+        # a store committed while the registry was a Spark table
+        # (batch_id, rows, committed_at): read it once in its
+        # committed_at order; the next commit writes the document
+        entries = [(r["batch_id"], r["rows"]) for r in sorted(
+            wh.read("corpus_batches").collect(),
+            key=lambda r: r["committed_at"])]
+    return [(b, n) for b, n in entries or [] if b != exclude]
 
 
 def commit_batch(wh, spark: SparkSession, batch_id: str,
                  rows: int) -> list[tuple]:
-    """Append (or replace) one registry row — the batch's commit point.
-    A replaced batch id moves to the end: the reprocessed batch is the
-    newest arrival. Returns the PRIOR surviving rows (for summaries)."""
+    """Append (or replace) the batch's registry entry — its commit
+    point. A replaced batch id moves to the end: the reprocessed batch
+    is the newest arrival. ``spark`` is unused (the registry is a
+    driver-side document). Returns the PRIOR surviving entries."""
     prior = registry_rows(wh, exclude=batch_id)
-    reg = spark.createDataFrame(
-        prior + [(batch_id, rows, time.time())], REGISTRY_SCHEMA)
-    wh.write(reg, REGISTRY, stage="registry", fingerprint=batch_id)
+    wh.write_json(REGISTRY, prior + [(batch_id, rows)])
     return prior
 
 
@@ -111,7 +110,7 @@ class Ingest(NamedTuple):
     decisions: DataFrame  #: the materialized ``incr_decisions_<id>``
     n_decided: int        #: new urls decided
     n_kept: int           #: rows appended to the store
-    prior: list[tuple]    #: registry rows of the other batches
+    prior: list[tuple]    #: registry entries of the other batches
 
 
 def ingest_batch(spark: SparkSession, wh, pages: DataFrame, batch_id: str,
@@ -146,52 +145,54 @@ def ingest_batch(spark: SparkSession, wh, pages: DataFrame, batch_id: str,
     if "/" in batch_id:
         raise ValueError(f"batch id must not contain '/': {batch_id!r}")
     # persisted across its consumers (decisions + the kept-new
-    # anti-join below) — O(batch) rows; released after the last use
+    # anti-join below) — O(batch) rows; released after the last use,
+    # also when a write raises
     new_sigs = minhash.signatures(pages, cfg).persist()
-    store_sigs = read_store(wh, new_sigs, minhash.SIG_COLS,
-                            exclude=batch_id)
-
-    store_bloom = None
-    if bloom_fpp is not None:
-        # registry rows give the store size without scanning it; the
-        # build itself shuffles ≤ m/64 word rows
-        from duplicate_finder_spark.operators.bloomfilter import BloomFilter
-        n_store = sum(n for _, n, _ in registry_rows(wh, exclude=batch_id))
-        if n_store:
-            store_bloom = BloomFilter.build(
-                store_sigs.select("url"), "url", n_expected=n_store,
-                fpp=bloom_fpp)
-
-    decisions = crosssnap.cross_snapshot_decisions(
-        new_sigs, store_sigs, cfg, store_bloom=store_bloom)
-    dec_manifest = wh.write(decisions, f"incr_decisions_{batch_id}",
-                            stage="incr_decisions", fingerprint=batch_id)
-    # reuse the MATERIALIZED decisions: the kept rows are one anti-join,
-    # not a recompute of the candidate/verify/components chain
-    decided = wh.read(f"incr_decisions_{batch_id}")
-    kept_manifest = wh.write(crosssnap.kept_signatures(new_sigs, decided),
-                             STORE_PREFIX + batch_id, stage="store_batch",
-                             fingerprint=batch_id)
-    new_sigs.unpersist()
-    # the COMMIT: one registry row per batch; a rerun of the same batch
-    # id replaces its row (and moves it to the end — the reprocessed
-    # batch is now the newest arrival)
+    try:
+        store_sigs = read_store(wh, new_sigs, minhash.SIG_COLS,
+                                exclude=batch_id)
+        store_bloom = None
+        if bloom_fpp is not None:
+            # registry entries give the store size without scanning it;
+            # the build itself shuffles ≤ m/64 word rows
+            n_store = sum(n for _, n in registry_rows(wh, batch_id))
+            if n_store:
+                store_bloom = BloomFilter.build(
+                    store_sigs.select("url"), "url", n_expected=n_store,
+                    fpp=bloom_fpp)
+        decisions = crosssnap.cross_snapshot_decisions(
+            new_sigs, store_sigs, cfg, store_bloom=store_bloom)
+        dec_manifest = wh.write(decisions, f"incr_decisions_{batch_id}",
+                                stage="incr_decisions",
+                                fingerprint=batch_id)
+        # reuse the MATERIALIZED decisions: the kept rows are one
+        # anti-join, not a recompute of the candidate/verify/CC chain
+        decided = wh.read(f"incr_decisions_{batch_id}")
+        kept_manifest = wh.write(
+            crosssnap.kept_signatures(new_sigs, decided),
+            STORE_PREFIX + batch_id, stage="store_batch",
+            fingerprint=batch_id)
+    finally:
+        new_sigs.unpersist()
+    # the COMMIT: one registry entry per batch; a rerun of the same
+    # batch id replaces its entry (and moves it to the end — the
+    # reprocessed batch is now the newest arrival)
     prior = commit_batch(wh, spark, batch_id, kept_manifest.rows)
     return Ingest(decided, dec_manifest.rows, kept_manifest.rows, prior)
 
 
 def compact_store(wh, spark: SparkSession, columns: list[str],
                   keep_last: int = 1) -> dict:
-    """Fold committed batch tables into one (see module docstring for
-    the commit protocol). Returns a summary dict; a no-op (fewer than
-    two foldable batches) returns {"folded": 0, ...} without writing."""
+    """Fold committed batch tables into one (protocol in the module
+    docstring; ``spark`` is unused). Fewer than two foldable batches:
+    no write, and the summary dict is {"folded": 0, ...}."""
     rows = registry_rows(wh)
     cut = len(rows) - keep_last if keep_last > 0 else len(rows)
     fold, survive = rows[:cut], rows[cut:]
     if len(fold) < 2:
         return {"folded": 0, "store_batches": len(rows)}
 
-    fold_ids = [b for b, _, _ in fold]
+    fold_ids = [b for b, _ in fold]
     merged_id = ("compacted-"
                  + hashlib.sha256("|".join(fold_ids).encode())
                  .hexdigest()[:12])
@@ -200,13 +201,9 @@ def compact_store(wh, spark: SparkSession, columns: list[str],
                      for b in fold_ids))
     manifest = wh.write(merged, STORE_PREFIX + merged_id,
                         stage="store_compact", fingerprint=merged_id)
-    # the commit: one registry write swaps B folded rows for the merged
-    # row; its committed_at is the oldest folded one so oldest-first
-    # read order is preserved
-    reg = spark.createDataFrame(
-        [(merged_id, manifest.rows, fold[0][2])] + survive,
-        REGISTRY_SCHEMA)
-    wh.write(reg, REGISTRY, stage="registry", fingerprint=merged_id)
+    # the commit: one registry write swaps B folded entries for the
+    # merged one, in their place at the head of the list
+    wh.write_json(REGISTRY, [(merged_id, manifest.rows)] + survive)
     for b in fold_ids:  # post-commit GC
         wh.drop(STORE_PREFIX + b)
     return {"folded": len(fold_ids), "merged_id": merged_id,
@@ -215,12 +212,12 @@ def compact_store(wh, spark: SparkSession, columns: list[str],
 
 
 def gc_store(wh) -> list[str]:
-    """Drop ``corpus_sigs__`` tables no registry row references —
+    """Drop ``corpus_sigs__`` tables the registry does not list —
     leftovers of a crash between a batch/compaction table write and its
     registry commit. An unreferenced table is invisible to every reader
     (``read_store`` walks the registry), so dropping it cannot change
     any result — but an ingest that has written its kept table and not
-    yet committed its registry row looks exactly like such an orphan,
+    yet committed its registry entry looks exactly like such an orphan,
     so run this from a maintenance window (the incremental job's
     --compact pass does), never concurrently with an ingest."""
     live = {STORE_PREFIX + b for b in store_batches(wh)}

@@ -29,6 +29,7 @@ durable state.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -94,12 +95,23 @@ class _Warehouse:
     """What both table formats derive from their own ``manifest``,
     ``read`` and ``write``."""
 
+    spark: SparkSession
     manifest: Callable[[str], StageManifest | None]
     read: Callable[..., DataFrame]
     write: Callable[..., StageManifest]
 
     def exists(self, name: str) -> bool:
         return self.manifest(name) is not None
+
+    def read_json(self, name: str):
+        """The value last committed by ``write_json``, or None."""
+        return (json.loads(self.read(name).first()["value"])
+                if self.exists(name) else None)
+
+    def write_json(self, name: str, value) -> None:
+        """Commit ``value`` as a one-row ``value string`` table."""
+        self.write(self.spark.createDataFrame([(json.dumps(value),)],
+                                              "value string"), name)
 
     # -- resumability ----------------------------------------------------------
 
@@ -177,19 +189,43 @@ class ParquetWarehouse(_Warehouse):
         with open(os.path.join(snap, "manifest.json"), "w") as f:
             json.dump(manifest.__dict__, f)
         # atomic pointer swap: build the link aside, replace over it
+        prev = os.path.basename(self._current(name) or "")
         tmp_link = os.path.join(table, ".current-" + uuid.uuid4().hex[:8])
         os.symlink(snap_id, tmp_link)
         os.replace(tmp_link, os.path.join(table, "current"))
-        # GC (snapshot expiration): keep the newest ``retain`` snapshots
-        # — the immediately superseded one always survives (retain >= 2)
-        # so in-flight readers bound to its real path finish their jobs
+        # GC (snapshot expiration): keep the new snapshot, the superseded
+        # one (in-flight readers bound to it finish; retain >= 2), then
+        # the newest — a crashed write's orphan never outranks those two
         snaps = sorted(
             (e for e in os.listdir(table) if e.startswith("snapshot-")),
-            key=lambda e: os.path.getmtime(os.path.join(table, e)),
-            reverse=True)
+            key=lambda e: (e != snap_id, e != prev,
+                           -os.path.getmtime(os.path.join(table, e))))
         for entry in snaps[self.retain:]:
             shutil.rmtree(os.path.join(table, entry), ignore_errors=True)
         return manifest
+
+    def read_json(self, name: str):
+        """``<root>/<name>.json``, read with one ``open``: no Spark job."""
+        try:
+            with open(os.path.join(self.root, name + ".json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def write_json(self, name: str, value) -> None:
+        """Commit ``<root>/<name>.json`` as ``write`` swaps its link:
+        build a dot-prefixed temp file aside, fsync, ``os.replace``."""
+        tmp = os.path.join(self.root, f".{name}.json-{uuid.uuid4().hex[:8]}")
+        try:
+            with open(tmp, "w") as f:
+                json.dump(value, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, os.path.join(self.root, name + ".json"))
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
 
     def read(self, name: str, snapshot_id: str | None = None) -> DataFrame:
         """Bind to a snapshot's real (immutable) path — the returned

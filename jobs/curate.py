@@ -32,7 +32,6 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from duplicate_finder_spark.functions.text import token_count
@@ -41,7 +40,9 @@ from duplicate_finder_spark.operators.curation import (decontaminate,
 from duplicate_finder_spark.operators.exact_substr import exact_substr_apply
 from duplicate_finder_spark.operators.paragraphs import paragraph_dedup_apply
 from duplicate_finder_spark.operators.sampling import token_budget_sample
+from duplicate_finder_spark.partitioning import autosize_unless_set
 from duplicate_finder_spark.pipeline import StageRecorder
+from duplicate_finder_spark.session import job_session, read_pages
 from duplicate_finder_spark.warehouse import get_warehouse
 
 
@@ -201,23 +202,13 @@ def main(argv: list[str] | None = None) -> int:
         print("--domain-blocklist requires --url-col", file=sys.stderr)
         return 2
 
-    spark = (SparkSession.builder
-             .appName("duplicate-finder-spark:curate")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
+    spark = job_session("curate")
     idc, txc = args.id_col, args.text_col
     try:
-        if args.format == "iceberg":
-            docs = spark.table(args.input)
-        else:
-            docs = spark.read.parquet(args.input)
+        docs = read_pages(spark, args.input, args.format)
         # shuffle sized to the scanned input, as in jobs/dedup.py: an
         # explicit spark.sql.shuffle.partitions in the SparkConf is kept
         if not args.no_autosize:
-            from duplicate_finder_spark.partitioning import (
-                autosize_unless_set)
             autosize_unless_set(spark, docs)
         # strata column (if any) rejoins at the end by id — the funnel
         # itself runs on the minimal (id, text) projection

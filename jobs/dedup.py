@@ -13,10 +13,8 @@ JSON summary line on stdout for the orchestrator.
 Config file: JSON object of PipelineConfig field overrides
 (duplicate_finder_spark/config.py), e.g.
 ``{"num_perm": 128, "lsh_bands": 32, "jaccard_threshold": 0.8}``.
-The session comes from ``SparkSession.builder.getOrCreate()`` so every
-spark-submit ``--conf`` (executors, shuffle partitions, Iceberg
-catalogs) applies untouched; only workload-semantic settings (Arrow,
-AQE) are set here as defaults.
+The session (``session.job_session``) keeps every spark-submit
+``--conf`` and only adds the workload-semantic defaults (Arrow, AQE).
 """
 
 from __future__ import annotations
@@ -26,10 +24,10 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
-from duplicate_finder_spark.config import PipelineConfig
+from duplicate_finder_spark.partitioning import autosize_unless_set
 from duplicate_finder_spark.pipeline import config_fingerprint, run_resumable
+from duplicate_finder_spark.session import (job_config, job_session,
+                                            read_pages)
 from duplicate_finder_spark.warehouse import get_warehouse
 
 
@@ -70,31 +68,11 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-    overrides = {}
-    if args.config:
-        with open(args.config) as f:
-            overrides = json.load(f)
-    cfg = PipelineConfig(**overrides)
-
-    spark = (SparkSession.builder
-             .appName("duplicate-finder-spark:dedup")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
+    cfg = job_config(args.config)
+    spark = job_session("dedup")
     try:
-        if args.format == "iceberg":
-            pages = spark.table(args.input)
-        elif args.format == "warc":
-            from duplicate_finder_spark.functions.extraction import (
-                with_extracted_text)
-            from duplicate_finder_spark.sources.warc import read_warc
-            pages = with_extracted_text(read_warc(spark, args.input))
-        else:
-            pages = spark.read.parquet(args.input)
-        wh = get_warehouse(
-            spark, args.warehouse,
-            fmt="parquet" if args.format == "warc" else args.format)
+        pages = read_pages(spark, args.input, args.format)
+        wh = get_warehouse(spark, args.warehouse, fmt=args.format)
 
         # size the shuffle to the INPUT, not the session default,
         # deriving from scanned bytes so an 8M-doc run does not push
@@ -102,8 +80,6 @@ def main(argv: list[str] | None = None) -> int:
         # spark.sql.shuffle.partitions in the SparkConf (spark-submit
         # --conf) is kept; --no-autosize keeps the session default too
         if not args.no_autosize:
-            from duplicate_finder_spark.partitioning import (
-                autosize_unless_set)
             n_parts = autosize_unless_set(spark, pages)
             if n_parts is not None:
                 print(f"shuffle.partitions={n_parts} (auto)",

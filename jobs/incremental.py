@@ -23,11 +23,9 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from duplicate_finder_spark.config import PipelineConfig
 from duplicate_finder_spark.operators.minhash import SIG_COLS
+from duplicate_finder_spark.session import (job_config, job_session,
+                                            read_pages)
 from duplicate_finder_spark.store import (compact_store, gc_store,
                                           ingest_batch)
 from duplicate_finder_spark.warehouse import get_warehouse
@@ -81,53 +79,30 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-    overrides = {}
-    if args.config:
-        with open(args.config) as f:
-            overrides = json.load(f)
-    cfg = PipelineConfig(**overrides)
-
-    spark = (SparkSession.builder
-             .appName("duplicate-finder-spark:incremental")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
+    cfg = job_config(args.config)
+    spark = job_session("incremental")
     try:
+        wh = get_warehouse(spark, args.warehouse, fmt=args.format)
         if args.compact:
-            wh = get_warehouse(spark, args.warehouse, fmt=args.format)
             summary = compact_store(wh, spark, SIG_COLS,
                                     keep_last=args.keep_last)
             summary["orphans_dropped"] = gc_store(wh)
             print(json.dumps(summary))
             return 0
-        if args.format == "iceberg":
-            pages = spark.table(args.input)
-        elif args.format == "warc":
-            from duplicate_finder_spark.functions.extraction import (
-                with_extracted_text)
-            from duplicate_finder_spark.sources.warc import read_warc
-            pages = with_extracted_text(read_warc(spark, args.input))
-        else:
-            pages = spark.read.parquet(args.input)
-        wh = get_warehouse(
-            spark, args.warehouse,
-            fmt="parquet" if args.format == "warc" else args.format)
-
+        pages = read_pages(spark, args.input, args.format)
         t0 = time.time()
         done = ingest_batch(spark, wh, pages, args.batch_id, cfg,
                             bloom_fpp=args.bloom_fpp)
         wall = round(time.time() - t0, 2)
 
-        by_reason = {r["reason"]: r["n"] for r in
-                     done.decisions.groupBy("reason")
-                     .agg(F.count("*").alias("n")).collect()}
+        by_reason = {r["reason"]: r["count"] for r in
+                     done.decisions.groupBy("reason").count().collect()}
         summary = {
             "batch_id": args.batch_id,
             "n_new": done.n_decided,
             "by_reason": by_reason,
             "batch_kept": done.n_kept,
-            "store_rows": sum(n for _, n, _ in done.prior) + done.n_kept,
+            "store_rows": sum(n for _, n in done.prior) + done.n_kept,
             "n_store_batches": len(done.prior) + 1,
             "wall_sec": wall,
             "docs_per_sec": (round(done.n_decided / wall, 1)

@@ -52,9 +52,10 @@ def test_store_registry_bounded_over_100_batches(spark, tmp_path):
         wh.write(sigs, STORE_PREFIX + f"b{i:03d}", stage="store_batch",
                  fingerprint=f"b{i:03d}")
         commit_batch(wh, spark, f"b{i:03d}", rows=1)
-    # the registry is ONE table rewritten per commit: snapshots bounded
-    # by retain no matter how many batches landed
-    assert len(_snap_dirs(root, REGISTRY)) <= wh.retain
+    # the registry is ONE document replaced per commit: no matter how
+    # many batches landed, one registry file and no temp files in root
+    assert [e for e in os.listdir(root)
+            if e.startswith((".", REGISTRY))] == [REGISTRY + ".json"]
     assert len(store_batches(wh)) == 100
     # compaction folds the 100 batch tables into one; orphan GC sweeps
     # the folded tables — table count returns to O(1)

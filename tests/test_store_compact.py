@@ -6,6 +6,8 @@ table count.
 
 from __future__ import annotations
 
+import os
+
 from duplicate_finder_spark.store import (REGISTRY, STORE_PREFIX,
                                           commit_batch, compact_store,
                                           gc_store, read_store,
@@ -54,7 +56,7 @@ def test_compact_preserves_reads_and_drops_folded(spark, tmp_path):
     assert not wh.exists(STORE_PREFIX + "b2")
     merged = out["merged_id"]
     assert wh.exists(STORE_PREFIX + merged)
-    # merged block keeps the OLDEST folded committed_at: read order is
+    # the merged entry takes the folded batches' place: read order is
     # merged-first
     assert batches[0] == merged
 
@@ -63,10 +65,15 @@ def test_compact_noop_below_two_foldable(spark, tmp_path):
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     _seed(spark, wh, {"b1": [("u1", 1)], "b2": [("u2", 2)]})
     # keep_last=1 leaves only one foldable batch -> no-op, no writes
-    hist_before = wh.history(REGISTRY)
+    doc = os.path.join(wh.root, REGISTRY + ".json")
+
+    def registry_state():
+        with open(doc, "rb") as f:
+            return f.read(), os.stat(doc).st_mtime_ns
+    before = registry_state()
     out = compact_store(wh, spark, COLS, keep_last=1)
     assert out == {"folded": 0, "store_batches": 2}
-    assert wh.history(REGISTRY) == hist_before
+    assert registry_state() == before
     assert wh.exists(STORE_PREFIX + "b1")
 
 

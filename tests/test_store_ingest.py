@@ -48,8 +48,8 @@ class Crash(RuntimeError):
 
 
 class CrashingWarehouse(ParquetWarehouse):
-    """Raises, before anything lands, on the first write whose table
-    name starts with ``crash_on``."""
+    """Raises, before anything lands, on the first write (table or JSON
+    document) whose name starts with ``crash_on``."""
 
     crash_on: str | None = None
 
@@ -57,6 +57,11 @@ class CrashingWarehouse(ParquetWarehouse):
         if self.crash_on and name.startswith(self.crash_on):
             raise Crash(name)
         return super().write(df, name, **kw)
+
+    def write_json(self, name, value):
+        if self.crash_on and name.startswith(self.crash_on):
+            raise Crash(name)
+        return super().write_json(name, value)
 
 
 def _pages(spark, rows):
@@ -119,9 +124,12 @@ def test_crash_at_each_write_leaves_store_unchanged(spark, seeded, tmp_path,
     pages = _pages(spark, BATCHES["b1"])
 
     wh.crash_on = step
+    # session fixtures of other test modules may hold cached tables
+    spark.catalog.clearCache()
     with pytest.raises(Crash):
         ingest_batch(spark, wh, pages, "b1", CFG)
-    spark.catalog.clearCache()  # the crashed run's persisted signatures
+    # the crashed run released its persisted signatures
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert (_store_urls(spark, wh), store_batches(wh)) == before
     orphans = [STORE_PREFIX + "b1"] if step == REGISTRY else []
     assert gc_store(wh) == orphans
